@@ -1011,18 +1011,21 @@ def q_near_dup_clusters(spark, sf_dir):
     # so one variant's rounds back-fill the executor slots the other
     # leaves idle (guide-§2.6 overlap-independent-jobs; the scheduler is
     # FIFO so neither starves). Results are deterministic integer mins,
-    # unaffected by scheduling order. inheritable_thread_target keeps the
-    # JVM thread-local job properties correct in the worker threads.
+    # unaffected by scheduling order. inheritable_thread_target(spark) keeps
+    # the JVM thread-local job properties AND the session's job tags in the
+    # worker threads.
     from concurrent.futures import ThreadPoolExecutor
 
     from pyspark import inheritable_thread_target
 
     with ThreadPoolExecutor(max_workers=2) as pool:
         f_star = pool.submit(
-            inheritable_thread_target(lambda: D.connected_components_star(pairs))
+            inheritable_thread_target(spark)(
+                lambda: D.connected_components_star(pairs)
+            )
         )
         f_min = pool.submit(
-            inheritable_thread_target(lambda: D.connected_components(pairs))
+            inheritable_thread_target(spark)(lambda: D.connected_components(pairs))
         )
         star = f_star.result().withColumn("method", F.lit("star"))
         minlabel = f_min.result().withColumn("method", F.lit("minlabel"))

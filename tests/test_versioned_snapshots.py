@@ -6,8 +6,10 @@ from __future__ import annotations
 import os
 
 import pandas as pd
+from pyspark.sql import functions as F
 
-from ocr_model_spark.pipeline import run_versioned
+from ocr_model_spark.operators.dispatch import doc_type_col
+from ocr_model_spark.pipeline import run_extraction, run_versioned
 from ocr_model_spark.sources.snapshots import latest_version, read_manifest, read_snapshot
 
 
@@ -50,3 +52,65 @@ def test_versioned_commit_resume_and_time_travel(spark, pages_path, tmp_path):
     snap = read_snapshot(spark, base)
     assert snap.count() == 601  # 301 old + 300 reprocessed under new params
     assert snap.select("params_fingerprint").distinct().count() == 2
+
+
+def _arrow_eval_rows_since(spark, after_execution_id: int) -> int:
+    """Summed ``ArrowEvalPython`` output rows over the SQL executions with
+    an id above ``after_execution_id`` (read from the SQL status store,
+    which the UI-less session still keeps)."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    rows = 0
+    execs = store.executionsList().iterator()
+    while execs.hasNext():
+        eid = execs.next().executionId()
+        if eid <= after_execution_id:
+            continue
+        values = store.executionMetrics(eid)
+        nodes = store.planGraph(eid).allNodes().iterator()
+        while nodes.hasNext():
+            node = nodes.next()
+            if node.name() != "ArrowEvalPython":
+                continue
+            metrics = node.metrics().iterator()
+            while metrics.hasNext():
+                m = metrics.next()
+                v = values.get(m.accumulatorId())
+                if m.name() == "number of output rows" and v.isDefined():
+                    rows += int(v.get().replace(",", ""))
+    return rows
+
+
+def _last_execution_id(spark) -> int:
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList().iterator()
+    last = -1
+    while execs.hasNext():
+        last = max(last, execs.next().executionId())
+    return last
+
+
+def test_versioned_commit_runs_the_kernel_once(spark, pages_path, tmp_path):
+    """The batch job evaluates the extraction UDF once per hot document:
+    the lineage collect reads the persisted pass the snapshot write built,
+    the cache is released afterwards, and the manifest lineage still counts
+    every region of a direct extraction of the same pages."""
+    hot = doc_type_col(F.col("html")).isin(
+        "pdf", "html", "text", "docx", "doc", "xls", "ppt"
+    )
+    n_hot = spark.read.parquet(pages_path).filter(hot).count()
+    assert n_hot > 0
+
+    def cached_rdds() -> set[int]:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    cached_before = cached_rdds()
+    before = _last_execution_id(spark)
+    assert run_versioned(spark, pages_path, str(tmp_path / "vsnap")) == 0
+    assert _arrow_eval_rows_since(spark, before) == n_hot
+    assert cached_rdds() == cached_before
+
+    lineage = read_manifest(str(tmp_path / "vsnap"))["lineage"]
+    docs = run_extraction(spark, pages_path)["docs"]
+    n_regions = docs.agg(F.sum(F.size("regions"))).first()[0]
+    assert sum(r["n_regions"] for r in lineage) == n_regions
