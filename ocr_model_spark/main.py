@@ -84,15 +84,19 @@ def main(argv: list[str] | None = None) -> int:
                 )
             )
             return 0
+        from ocr_model_spark.sources.snapshots import read_manifest, read_snapshot
+
         if args.streaming:
             from ocr_model_spark.streaming.pipeline import streaming_extraction
 
-            streaming_extraction(spark, args.input, args.output)
-            n = spark.read.parquet(args.output).count()
+            streaming_extraction(
+                spark, args.input, args.output, params={"profile": args.profile}
+            )
+            snap = read_snapshot(spark, args.output)
+            n = snap.count() if snap is not None else 0
             print(json.dumps({"mode": "streaming", "snapshot_rows": n}))
             return 0
         from ocr_model_spark.pipeline import run_versioned
-        from ocr_model_spark.sources.snapshots import read_manifest, read_snapshot
 
         pages = None
         if args.input_format == "warc":

@@ -399,7 +399,9 @@ def embedding_near_dups(
     # member of that bucket, and every pair member comes from such a bucket),
     # but this reads the small (bucket, ids) aggregate once instead of
     # carrying the quadratic pair-generation subtree through both union
-    # branches
+    # branches. The equality holds only because _all_pairs emits every
+    # (i<j) pair of a bucket uncapped: a per-bucket pair cap would make
+    # these ids a superset (output still correct, this argument stale)
     ids = buckets.select(F.explode("ids").alias("id")).distinct()
     # per-vector norms are computed ONCE here and carried as columns —
     # cosine(a, b) = dot/(norm*norm) recomputed both norms per PAIR, an

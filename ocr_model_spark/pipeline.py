@@ -13,25 +13,25 @@ Scale notes (north rule):
     ``(url_host, salt)`` where the salt is DETERMINISTIC (derived from
     ``xxhash64(url)``, not rand()) so replays produce identical partition
     assignment — required for reproducible lineage.
-  * **Resume**: exactly-once per (url, content_sha256) via a left-anti join
-    against the committed snapshot — the reference's content-hash cache
+  * **Resume**: one snapshot protocol, the versioned manifest
+    (``sources/snapshots.py``), for the batch job and the streaming sink
+    alike (:func:`run_versioned`). Exactly-once per (url, content_sha256,
+    params fingerprint) via a left-anti join against the committed
+    snapshot — the reference's content-hash cache
     (``worker/storage_manager.py:27-44``, ``document_processor.py:170-205``)
     turned into a relational operator. The hash is computed scan-side so
     only the (url, hash) projection of history shuffles, never payloads.
   * **Lineage**: per-partition metric rows (partition id, input file, doc
-    counts, failure counters) are committed with the snapshot and read the
-    SAME extraction pass the docs write reads: the commit persists one flat
-    frame (``regions`` replaced by its ``n_regions`` count — a cache of the
-    nested region structs costs more than recomputing them), writes the
-    docs from it, then aggregates lineage from the cache. The kernel UDF
-    runs once per committed delta, not once per action.
+    counts, failure counters) are stored in the version's manifest and
+    read the SAME extraction pass the docs write reads: the commit
+    persists one flat frame (``regions`` replaced by its ``n_regions``
+    count — a cache of the nested region structs costs more than
+    recomputing them), writes the docs from it, then aggregates lineage
+    from the cache. The kernel UDF runs once per committed delta, not
+    once per action.
 """
 
 from __future__ import annotations
-
-import os
-from collections.abc import Iterator
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -60,20 +60,6 @@ def salted_repartition(
     if num_partitions:
         return pages.repartition(num_partitions, host, salt)
     return pages.repartition(host, salt)
-
-
-def resume_filter(pages: DataFrame, snapshot: DataFrame | None) -> DataFrame:
-    """Drop pages already present in the committed snapshot (same url AND
-    same content hash — a re-crawled page with changed bytes reprocesses).
-
-    Left-anti join on the tiny (url, content_sha256) projection; AQE turns
-    it into a broadcast when history fits.
-    """
-    if snapshot is None:
-        return pages
-    done = snapshot.select("url", "content_sha256").dropDuplicates(["url", "content_sha256"])
-    keyed = pages.withColumn("content_sha256", F.sha2(F.col("html"), 256))
-    return keyed.join(done, ["url", "content_sha256"], "left_anti").drop("content_sha256")
 
 
 LINEAGE_DOC_TYPES = (
@@ -120,28 +106,6 @@ def _lineage_agg(flat: DataFrame) -> DataFrame:
     )
 
 
-@contextmanager
-def _single_pass(docs: DataFrame) -> Iterator[tuple[DataFrame, DataFrame]]:
-    """Yield ``(docs_to_write, lineage)`` for one snapshot commit, both read
-    from ONE persisted :func:`_flat_docs` pass, so the extraction UDF runs
-    once for the write and the lineage action together (without the cache
-    each action re-runs every kernel). Default storage level
-    (MEMORY_AND_DISK): a large partition spills instead of failing.
-
-    ``extract_us`` is a wall-clock reading — COMMITTED artifacts must stay
-    a pure function of the input (determinism rule: replays of identical
-    input produce identical snapshot bytes); timing lives on the live frame
-    for bench/monitoring only."""
-    flat = _flat_docs(docs).persist()
-    try:
-        yield (
-            flat.drop("n_regions", "extract_us"),
-            _lineage_agg(flat).drop("extract_us"),
-        )
-    finally:
-        flat.unpersist()
-
-
 def extraction_cost_by_type(docs: DataFrame) -> DataFrame:
     """Per-doc-type kernel cost profile (docs, total/mean wall micros) — the
     artifact that decomposes a throughput regression into payload classes
@@ -158,7 +122,6 @@ def extraction_cost_by_type(docs: DataFrame) -> DataFrame:
 def run_extraction(
     spark: SparkSession,
     pages_path: str,
-    snapshot_dir: str | None = None,
     num_partitions: int | None = None,
     salt: bool = False,
 ) -> dict[str, DataFrame]:
@@ -179,10 +142,6 @@ def run_extraction(
     pages = read_pages(spark, pages_path)
     # capture scan-time lineage before anything else
     pages = pages.withColumn("input_file", F.input_file_name())
-    prev = None
-    if snapshot_dir and os.path.exists(os.path.join(snapshot_dir, "_SUCCESS")):
-        prev = spark.read.parquet(snapshot_dir)
-    pages = resume_filter(pages, prev)
     if salt:
         pages = salted_repartition(pages, num_partitions)
     elif num_partitions is not None:
@@ -208,13 +167,18 @@ def run_versioned(
     (sources/snapshots.py): resume keyed on (url, content hash, params
     fingerprint), atomic manifest commit, lineage embedded in the manifest.
     Returns the committed version, or None when nothing new to process.
+    ``pages`` replaces the scan of ``pages_path`` (a WARC read, or a
+    streaming micro-batch: a replayed batch resumes to an empty delta and
+    commits nothing).
 
     The extraction UDF runs once per committed delta: the delta's docs are
     persisted as one flat frame, ``regions`` dropped before the persist
     (the snapshot never stores it, and a cache of nested structs costs
     more than recomputing them) and replaced by the ``n_regions`` count
     that lineage needs. The snapshot write fills the cache and the lineage
-    collect reads it (:func:`_single_pass`)."""
+    collect reads it; without the cache each action re-runs every kernel.
+    Default storage level (MEMORY_AND_DISK): a large partition spills
+    instead of failing."""
     import hashlib
     import json as _json
 
@@ -239,23 +203,19 @@ def run_versioned(
     # extraction runs on scan partitions — payloads never shuffle (see
     # run_extraction docstring)
     docs = extract_pages(pages).withColumn("params_fingerprint", F.lit(fp))
-    with _single_pass(docs) as (flat, lineage):
-        return commit_version(flat, lineage, base, fp)
-
-
-def commit_snapshot(results: dict[str, DataFrame], out_dir: str) -> None:
-    """Commit ``results["docs"]`` and its per-partition lineage for resume.
-    The FIRST commit creates the snapshot; later commits APPEND their delta
-    (a resumed run processes only new/changed urls, and must not clobber
-    already-committed history). On a real cluster this is an Iceberg append
-    transaction; parquet emulates it. The lineage is aggregated from the
-    same persisted pass as the written docs (:func:`_single_pass`), so
-    ``results["lineage"]`` is not re-evaluated.
-    """
-    mode = "append" if os.path.exists(os.path.join(out_dir, "_SUCCESS")) else "overwrite"
-    with _single_pass(results["docs"]) as (docs, lineage):
-        docs.write.mode(mode).parquet(out_dir)
-        lineage.write.mode(mode).parquet(os.path.join(out_dir, "_lineage"))
+    flat = _flat_docs(docs).persist()
+    try:
+        # extract_us is a wall-clock reading: the COMMITTED artifacts stay a
+        # pure function of the input (replays of identical input produce
+        # identical snapshot bytes); timing lives on the live frame only
+        return commit_version(
+            flat.drop("n_regions", "extract_us"),
+            _lineage_agg(flat).drop("extract_us"),
+            base,
+            fp,
+        )
+    finally:
+        flat.unpersist()
 
 
 def corpus_gate(docs: DataFrame, quality_threshold: float = 0.3) -> DataFrame:
@@ -275,8 +235,8 @@ def corpus_gate(docs: DataFrame, quality_threshold: float = 0.3) -> DataFrame:
 
     return docs.select(
         # the pipeline's unique doc key: url ALONE is not one (a re-crawl
-        # carries the same url with changed bytes — the exact case
-        # resume_filter models), and joining/minhashing on a non-unique id
+        # carries the same url with changed bytes — the exact case the
+        # content-hash resume models), and joining/minhashing on a non-unique id
         # multiplies rows and merges signatures
         F.sha2(F.concat_ws("\n", "url", "content_sha256"), 256).alias(
             "doc_key"

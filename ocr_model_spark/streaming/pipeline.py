@@ -5,10 +5,13 @@ is no watermark/window semantics to replicate — but the engine exposes the
 same batch pipeline incrementally:
 
   * :func:`streaming_extraction` — ``readStream`` over the pages table,
-    ``trigger(availableNow=True)``, the SAME extraction transformations
-    (one lazy plan, batch/streaming agnostic), ``foreachBatch`` committing
-    each micro-batch with lineage — exactly-once resume falls out of the
-    content-hash anti-join inside the batch writer.
+    ``trigger(availableNow=True)``, ``foreachBatch`` handing each
+    micro-batch to the batch job's own commit
+    (:func:`ocr_model_spark.pipeline.run_versioned`): the same extraction
+    plan, the same versioned-manifest snapshot and lineage. ``foreachBatch``
+    delivers at least once; a replayed micro-batch is resume-filtered
+    against the committed manifest, so it runs no kernel and commits no
+    version — exactly-once per (url, content hash, params).
   * :func:`streaming_windowed_counts` — watermarked tumbling-window agg over
     the events table (the generic streaming-analytics pattern, verified
     against a DuckDB ``date_trunc`` oracle).
@@ -24,7 +27,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ocr_model_spark.operators.extract import doc_summary, extract_pages
+from ocr_model_spark.operators.extract import extract_pages
 from ocr_model_spark.sources.pages import PAGES_SCHEMA
 
 
@@ -119,17 +122,19 @@ def streaming_dedup_counts(spark: SparkSession, docs_path: str) -> DataFrame:
 
 
 def streaming_extraction(
-    spark: SparkSession, pages_path: str, out_dir: str
+    spark: SparkSession, pages_path: str, out_dir: str, params: dict | None = None
 ) -> None:
-    """Run the extraction pipeline as an incremental stream: each micro-batch
-    goes through the same ``extract_pages`` plan and is committed with its
-    per-partition lineage (north-rule resume granularity = micro-batch)."""
-    from ocr_model_spark.pipeline import commit_snapshot
+    """Run the extraction pipeline as an incremental stream into the
+    versioned snapshot base ``out_dir``: each micro-batch is committed by
+    :func:`ocr_model_spark.pipeline.run_versioned` (resume against the
+    manifest, one kernel pass, one version with its per-partition lineage;
+    resume granularity = micro-batch). ``params`` is the extraction-params
+    fingerprint input, as for the batch job — batch and streaming runs into
+    one base resume each other."""
+    from ocr_model_spark.pipeline import run_versioned
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        # commit_snapshot persists the extracted batch once for both of its
-        # writes (docs, lineage): one kernel pass per micro-batch
-        commit_snapshot({"docs": extract_pages(batch_df)}, out_dir)
+        run_versioned(spark, pages_path, out_dir, params=params, pages=batch_df)
 
     import os
 
@@ -143,8 +148,7 @@ def streaming_extraction(
         reader.parquet(pages_path)
         .writeStream.foreachBatch(sink)
         .trigger(availableNow=True)
-        # sibling dir: the snapshot writer owns out_dir and would clobber a
-        # checkpoint nested inside it
+        # sibling dir: the snapshot base belongs to the manifest protocol
         .option("checkpointLocation", f"{out_dir.rstrip('/')}_checkpoint")
         .start()
     )

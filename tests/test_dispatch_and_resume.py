@@ -1,15 +1,13 @@
-"""JVM-side sniff agrees with the Python kernel; resume anti-join semantics."""
+"""JVM-side sniff agrees with the Python kernel; lineage roll-up and
+doc-type dispatch over the extraction output."""
 
 from __future__ import annotations
 
-import os
-
-import pandas as pd
 from pyspark.sql import functions as F
 
 from ocr_model_spark.kernels.sniff import sniff_doc_type
 from ocr_model_spark.operators.dispatch import doc_type_col
-from ocr_model_spark.pipeline import commit_snapshot, run_extraction
+from ocr_model_spark.pipeline import run_extraction
 
 
 def test_doc_type_col_matches_python_sniff(spark, pages_path):
@@ -46,26 +44,6 @@ def test_doc_type_col_agrees_on_edge_payloads(spark):
     got = {r["i"]: r["jvm_type"] for r in df.collect()}
     for i, p in enumerate(payloads):
         assert got[i] == sniff_doc_type(p), p[:40]
-
-
-def test_resume_skips_committed_work(spark, pages_path, tmp_path):
-    snap = str(tmp_path / "snapshot")
-    res = run_extraction(spark, pages_path, snapshot_dir=snap)
-    n_first = res["docs"].count()
-    assert n_first == 300
-    commit_snapshot(res, snap)
-    assert os.path.exists(os.path.join(snap, "_SUCCESS"))
-    # second run over the same input: everything is already committed
-    res2 = run_extraction(spark, pages_path, snapshot_dir=snap)
-    assert res2["docs"].count() == 0
-
-    # a re-crawled url with CHANGED bytes must reprocess
-    pages = pd.read_parquet(pages_path)
-    pages.loc[0, "html"] = b"<html><body><p>Changed content long enough to extract now.</p></body></html>"
-    changed_path = str(tmp_path / "pages_changed.parquet")
-    pages.to_parquet(changed_path, index=False)
-    res3 = run_extraction(spark, changed_path, snapshot_dir=snap)
-    assert res3["docs"].count() == 1
 
 
 def test_lineage_counts_roll_up(spark, pages_path):

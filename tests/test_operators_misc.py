@@ -95,15 +95,23 @@ def test_resize_and_frame_sample_plumbing(spark, pages_path):
 
 
 def test_streaming_extraction_commits_snapshot(spark, pages_path, tmp_path):
+    from ocr_model_spark.sources.snapshots import (
+        latest_version,
+        read_manifest,
+        read_snapshot,
+    )
     from ocr_model_spark.streaming.pipeline import streaming_extraction
 
     out = str(tmp_path / "stream_snap")
     # pages_path is a multi-file dataset directory — stream it directly
     streaming_extraction(spark, pages_path, out)
-    snap = spark.read.parquet(out)
-    assert snap.count() == 300
-    lin = spark.read.parquet(out + "/_lineage")
-    assert lin.agg(F.sum("n_docs")).first()[0] == 300
+    assert read_snapshot(spark, out).count() == 300
+    lineage = [
+        r
+        for v in range(latest_version(out) + 1)
+        for r in read_manifest(out, version=v)["lineage"]
+    ]
+    assert sum(r["n_docs"] for r in lineage) == 300
 
 
 def test_driver_contract(spark):

@@ -114,3 +114,48 @@ def test_versioned_commit_runs_the_kernel_once(spark, pages_path, tmp_path):
     docs = run_extraction(spark, pages_path)["docs"]
     n_regions = docs.agg(F.sum(F.size("regions"))).first()[0]
     assert sum(r["n_regions"] for r in lineage) == n_regions
+
+
+def test_streaming_sink_commits_through_the_manifest(spark, pages_path, tmp_path):
+    """The streaming sink is the batch commit: one kernel pass per hot doc,
+    a replayed micro-batch (the sink committed, then the driver died before
+    Spark logged the batch) and a stream over batch-committed pages both
+    resume to nothing, and the streamed rows equal the batch rows."""
+    from ocr_model_spark.streaming.pipeline import streaming_extraction
+
+    hot = doc_type_col(F.col("html")).isin(
+        "pdf", "html", "text", "docx", "doc", "xls", "ppt"
+    )
+    n_hot = spark.read.parquet(pages_path).filter(hot).count()
+    stream_base = str(tmp_path / "stream")
+
+    before = _last_execution_id(spark)
+    streaming_extraction(spark, pages_path, stream_base)
+    assert _arrow_eval_rows_since(spark, before) == n_hot
+    version = latest_version(stream_base)
+    assert version is not None
+    assert read_snapshot(spark, stream_base).count() == 300
+
+    commits = os.path.join(f"{stream_base}_checkpoint", "commits")
+    for name in ("0", ".0.crc"):
+        if os.path.exists(os.path.join(commits, name)):
+            os.remove(os.path.join(commits, name))
+    before = _last_execution_id(spark)
+    streaming_extraction(spark, pages_path, stream_base)
+    assert _arrow_eval_rows_since(spark, before) == 0
+    assert latest_version(stream_base) == version
+    assert read_snapshot(spark, stream_base).count() == 300
+
+    batch_base = str(tmp_path / "batch")
+    assert run_versioned(spark, pages_path, batch_base) == 0
+    streaming_extraction(spark, pages_path, batch_base)
+    assert latest_version(batch_base) == 0
+
+    def rows(base: str) -> list[tuple]:
+        snap = read_snapshot(spark, base)
+        return sorted(
+            tuple(r)
+            for r in snap.select("url", "content_sha256", "text_extracted").collect()
+        )
+
+    assert rows(stream_base) == rows(batch_base)
